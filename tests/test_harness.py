@@ -10,13 +10,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from wordspell_spark.harness import (
-    build_sketches,
-    collect_sketches,
-    make_cms_count_udf,
-    make_freq_count_udf,
-    make_membership_udf,
-)
+from wordspell_spark import harness
+from wordspell_spark.harness import build_sketches, collect_sketches, make_query_udf
 from wordspell_spark.sketches import SketchSpec, bloom, cms, freq, hll, kll, tdigest, theta
 
 
@@ -41,14 +36,33 @@ def test_hll_per_source_within_bound(spark, sequences_small, exact_distinct_per_
         assert abs(est - true) <= 5 * hll.rse(st) * true + 2, f"{src}: {est} vs {true}"
 
 
-def test_hll_salted_two_level_same_registers(spark, sequences_small):
-    spec = SketchSpec("hll", {"p": 12})
-    flat = collect_sketches(build_sketches(sequences_small, spec, ["source"], "tokens"), spec, ["source"])
-    salted = collect_sketches(
-        build_sketches(sequences_small, spec, ["source"], "tokens", salt_buckets=4), spec, ["source"]
-    )
-    for src in flat:
-        assert (flat[src].registers == salted[src].registers).all(), "salted tree must be bit-identical (HLL merge idempotent)"
+_ORDER_FREE_SPECS = {
+    "hll": {"p": 12},
+    "theta": {"k": 512},
+    "bloom": {"n_estimate": 20_000, "fpr": 0.01},
+    "cms": {"width": 1024, "depth": 4},
+    "sample": {"k": 256},
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_ORDER_FREE_SPECS))
+def test_bounded_fanin_tree_bit_identical(spark, sequences_small, monkeypatch, kind):
+    """Forcing middle tree levels (fan-in 2 over 8 partitions) must change
+    the plan, not the bytes: these kinds merge order-free."""
+    spec = SketchSpec(kind, _ORDER_FREE_SPECS[kind])
+    df = sequences_small.repartition(8)
+
+    def build():
+        out = build_sketches(df, spec, ["source"], "tokens")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return plan, {r["source"]: (bytes(r["sketch"]), r["rows"], r["items"]) for r in out.collect()}
+
+    flat_plan, flat = build()
+    monkeypatch.setattr(harness, "MERGE_FANIN", 2)
+    tree_plan, tree = build()
+    assert flat_plan.count("Exchange hashpartitioning") == 1, flat_plan
+    assert tree_plan.count("Exchange hashpartitioning") > 1, tree_plan
+    assert tree == flat
 
 
 def test_global_sketch_no_groups(spark, sequences_small):
@@ -103,16 +117,6 @@ def test_theta_per_source_within_bound_and_set_ops(spark, sequences_small, exact
     assert abs(theta.union_estimate(states[a], states[b]) - union_true) <= tol
 
 
-def test_theta_salted_two_level_same_hashes(spark, sequences_small):
-    spec = SketchSpec("theta", {"k": 512})
-    flat = collect_sketches(build_sketches(sequences_small, spec, ["source"], "tokens"), spec, ["source"])
-    salted = collect_sketches(
-        build_sketches(sequences_small, spec, ["source"], "tokens", salt_buckets=4), spec, ["source"]
-    )
-    for src in flat:
-        assert (flat[src].hashes == salted[src].hashes).all(), "salted tree must be bit-identical (theta merge order-free)"
-
-
 def test_freq_heavy_hitters_bounds_and_udf(spark, sequences_small):
     spec = SketchSpec("freq", {"k": 128})
     result = build_sketches(sequences_small, spec, None, "tokens")
@@ -132,7 +136,7 @@ def test_freq_heavy_hitters_bounds_and_udf(spark, sequences_small):
         if true > n / 129:
             assert int(k) in st.counters, f"guaranteed-heavy item {k} dropped"
     # broadcast UDF twin agrees with the driver-side query
-    udf = make_freq_count_udf(spark, payload)
+    udf = make_query_udf(spark, payload)
     got = {
         int(r["t"]): int(r["mg"])
         for r in sequences_small.select(F.explode("tokens").alias("t"))
@@ -172,7 +176,7 @@ def test_bloom_membership_udf_roundtrip(spark, sequences_small):
     result = build_sketches(sequences_small, spec, None, "tokens")
     payload = result.first()["sketch"]
 
-    udf = make_membership_udf(spark, payload)
+    udf = make_query_udf(spark, payload)
     probed = distinct_tokens.withColumn("hit", udf(F.col("t")))
     assert probed.filter(~F.col("hit")).count() == 0, "zero false negatives"
 
@@ -185,7 +189,7 @@ def test_bloom_membership_udf_roundtrip(spark, sequences_small):
 def test_cms_count_udf(spark, sequences_small):
     spec = SketchSpec("cms", {"eps": 1e-4, "delta": 1e-3})
     payload = build_sketches(sequences_small, spec, None, "tokens").first()["sketch"]
-    udf = make_cms_count_udf(spark, payload)
+    udf = make_query_udf(spark, payload)
     exact = (
         sequences_small.select(F.explode("tokens").alias("t")).groupBy("t").count().limit(500)
     )

@@ -463,6 +463,27 @@ class TestTDigest:
         q = np.array([0.25, 0.5, 0.75])
         assert np.allclose(tdigest.quantile(rt, q), tdigest.quantile(st, q))
 
+    def test_corrupt_delta_and_centroids_rejected(self):
+        """A bit-rotted delta (the mutation fuzz once accepted -1.29e122 and
+        later failed a float→int cast) or a non-finite centroid must raise
+        at deserialize."""
+        import struct
+
+        st = tdigest.update(tdigest.create(delta=50), np.arange(500).astype(float))
+        kind, params, body = serde.unpack_header(tdigest.serialize(st))
+        body = bytes(body)
+        for delta in (-1.29e122, 0.0, float("inf"), float("nan")):
+            bad = serde.pack_header(kind, struct.pack("<d", delta)) + body
+            with pytest.raises(serde.SketchFormatError):
+                tdigest.deserialize(bad)
+        head = struct.calcsize("<dddI")
+        ncent = (len(body) - head) // 16
+        for off in (head, head + 8 * ncent):  # first mean, first weight
+            for v in (float("inf"), float("-inf")):
+                bad = serde.pack_header(kind, params) + body[:off] + struct.pack("<d", v) + body[off + 8 :]
+                with pytest.raises(serde.SketchFormatError):
+                    tdigest.deserialize(bad)
+
 
 # ---------------------------------------------------------------- registry / spec
 

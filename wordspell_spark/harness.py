@@ -1,27 +1,36 @@
-"""Spark aggregation harness — two-level mergeable-sketch builds.
+"""Spark aggregation harness — the one aggregation core behind every sketch.
 
-This is the architectural core (SURVEY.md §3.2): the Spark-native
+Every sketch result is a byte payload merged in two levels: the Spark-native
 generalization of the reference's partial→final additive accumulator merge
-(/root/reference/components/index/models.go:58-72) and its single shared
-Bloom build loop (/root/reference/builder.go:97-119).
+(components/index/models.go:58-72) and its single shared Bloom build loop
+(builder.go:97-119).
 
-    Stage A  mapInPandas over input partitions: one partial sketch per
-             (group key) per partition — the map-side combine.  Output is
-             tiny: ≤ |groups| rows per partition, each a byte payload.
-    Stage B  (optional, for very wide clusters) groupBy(keys, salt) partial
-             merge — the middle level of a treeAggregate.
-    Stage C  groupBy(keys) final merge → one payload per group.
+    partial  ``_partials``: mapInPandas over input partitions, one payload
+             per (group key, kind) per partition — the map-side combine.
+             Output is tiny: ≤ |groups| × |kinds| rows per partition.
+    tree     ``tree_levels``: while more than ``MERGE_FANIN`` partitions
+             remain, the partials of ``MERGE_FANIN`` consecutive partitions
+             merge per key — the middle levels of a treeAggregate.
+    final    ``merge_partials``: groupBy(keys) merge → one payload per group,
+             folded in the kind its header names.
 
-Why this shape at 100 TB: the shuffle after stage A moves only
+``build_sketches``/``build_sketches_multi`` run all three; checkpoint
+``finalize`` and the streaming ``merge_into_state`` run the final merge;
+``spell.build_deletion_bloom`` runs its own partial, the tree and a driver
+``merge_payloads``.
+
+Why this shape at 100 TB: the shuffle after the partial stage moves only
 |partitions| × |groups| payloads (KBs each), never raw rows, so a skewed
 ``source`` (70% web in the fixture) cannot create a hot shuffle partition of
-raw data — skew is absorbed map-side, and the optional salt level bounds the
-final merge fan-in.  No per-row Python anywhere: kernels consume whole Arrow
-batches as numpy arrays (BASELINE.json input_hint).
+raw data.  Skew is absorbed map-side: a (key, kind) gets at most one partial
+per partition, so the partition count alone bounds every merge's fan-in and
+the tree keeps it ≤ ``MERGE_FANIN`` (FP-Hadoop, VLDB 2015).  No per-row
+Python anywhere: kernels consume whole Arrow batches as numpy arrays.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -36,10 +45,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .sketches import SketchSpec
+from .sketches import SketchSpec, deserialize_any, merge_payloads, module_for
 from .sketches.hashing import hash64
 
-_GLOBAL_KEY = "__all__"
+MERGE_FANIN = 64  # most payloads per key one merge task reads
+PAYLOAD_FIELDS = [
+    StructField("sketch", BinaryType(), False),
+    StructField("rows", LongType(), False),
+    StructField("items", LongType(), False),
+]
+_PAYLOAD_COLS = [f.name for f in PAYLOAD_FIELDS]
+_LEVEL = "__level"
 
 
 def _flatten_values(series: pd.Series) -> np.ndarray:
@@ -65,121 +81,39 @@ def _flatten_values(series: pd.Series) -> np.ndarray:
     return vals[~pd.isna(vals)]
 
 
-def _partial_schema(df: DataFrame, group_cols: list[str]) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
-    return StructType(
-        fields
-        + [
-            StructField("sketch", BinaryType(), False),
-            StructField("rows", LongType(), False),
-            StructField("items", LongType(), False),
-        ]
-    )
-
-
-def build_sketches(
-    df: DataFrame,
-    spec: SketchSpec,
-    group_cols: list[str] | None,
-    value_col: str,
-    *,
-    salt_buckets: int | None = None,
+def _partials(
+    df: DataFrame, specs: dict[str, tuple[SketchSpec, str]], group_cols: list[str]
 ) -> DataFrame:
-    """Build one merged sketch per group over ``value_col``.
+    """One partial per (group key, kind) per partition, all kinds in one pass.
 
-    Returns DataFrame[*group_cols, sketch BINARY, rows LONG, items LONG]
-    where ``rows`` counts input rows and ``items`` counts values fed to the
-    sketch (array columns contribute their element count).
+    Returns DataFrame[*group_cols, kind, sketch, rows, items].
     """
-    group_cols = list(group_cols or [])
-    if not group_cols:
-        df = df.withColumn(_GLOBAL_KEY, F.lit(_GLOBAL_KEY))
-        out = build_sketches(df, spec, [_GLOBAL_KEY], value_col, salt_buckets=salt_buckets)
-        return out.drop(_GLOBAL_KEY)
-
-    narrow = df.select(*group_cols, value_col)
-    partial_schema = _partial_schema(narrow, group_cols)
-
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # One partial sketch per group key per *partition* (not per batch):
-        # states persist across the batch iterator = map-side combine.
-        states: dict[tuple, list] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                key = key if isinstance(key, tuple) else (key,)
-                ent = states.get(key)
-                if ent is None:
-                    ent = states[key] = [spec.create(), 0, 0]
-                vals = _flatten_values(sub[value_col])
-                spec.update(ent[0], vals)
-                ent[1] += len(sub)
-                ent[2] += len(vals)
-        if not states:
-            return
-        rows = [(*k, spec.serialize(st), nrows, nitems) for k, (st, nrows, nitems) in states.items()]
-        yield pd.DataFrame(rows, columns=[*group_cols, "sketch", "rows", "items"])
-
-    partials = narrow.mapInPandas(partial_build, schema=partial_schema)
-
-    merge_schema = partial_schema
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = spec.merge_payloads(list(pdf["sketch"]))
-        head = pdf.iloc[[0]][group_cols].reset_index(drop=True)
-        head["sketch"] = [merged]
-        head["rows"] = [int(pdf["rows"].sum())]
-        head["items"] = [int(pdf["items"].sum())]
-        return head
-
-    if salt_buckets and salt_buckets > 1:
-        # middle tree level: merge within (key, salt) before the final merge
-        salted = partials.withColumn("__salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)))
-        mid = salted.groupBy(*group_cols, "__salt").applyInPandas(
-            lambda pdf: merge_group(pdf.drop(columns="__salt")).assign(__salt=pdf["__salt"].iloc[0]),
-            schema=StructType(merge_schema.fields + [StructField("__salt", LongType())]),
-        ).drop("__salt")
-        partials = mid
-
-    return partials.groupBy(*group_cols).applyInPandas(merge_group, schema=merge_schema)
-
-
-def build_sketches_multi(
-    df: DataFrame,
-    specs: dict[str, tuple[SketchSpec, str]],
-    group_cols: list[str],
-) -> DataFrame:
-    """Build SEVERAL sketch kinds per group in ONE pass over the data.
-
-    ``specs``: {kind_name: (SketchSpec, value_col)}.  Returns a long-format
-    DataFrame[*group_cols, kind STRING, sketch BINARY, rows LONG, items LONG].
-
-    Why: at 100 TB the scan IS the cost — five separate builds read the
-    input five times and pay five job/shuffle latencies.  One mapInPandas
-    maintains all states per group and the single merge shuffle carries
-    |partitions| x |groups| x |kinds| KB payloads.
-    """
-    group_cols = list(group_cols)
     value_cols = sorted({vc for _, vc in specs.values()})
     narrow = df.select(*group_cols, *value_cols)
-    out_schema = StructType(
+    schema = StructType(
         [narrow.schema[c] for c in group_cols]
-        + [
-            StructField("kind", StringType(), False),
-            StructField("sketch", BinaryType(), False),
-            StructField("rows", LongType(), False),
-            StructField("items", LongType(), False),
-        ]
+        + [StructField("kind", StringType(), False), *PAYLOAD_FIELDS]
     )
     spec_items = sorted(specs.items())  # deterministic kind order
+    # shared-hash path: every hash-keyed kind (bloom / hll / cms / theta)
+    # derives all its indices from h1 = hash64(v), so a column read by two
+    # or more of them is hashed ONCE per batch and aggregated to (distinct
+    # hashes, counts) — bit-identical payloads (idempotent kinds ignore
+    # counts; cms adds them as weights).  A lone hash-keyed kind is faster
+    # on its own ``update``, which skips the factorize.
+    hash_keyed = {n for n, (spec, _) in spec_items if hasattr(spec.module, "update_unique_hashes")}
+    readers = Counter(specs[n][1] for n in hash_keyed)
+    shared = {n for n in hash_keyed if readers[specs[n][1]] > 1}
 
     def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # states persist across the batch iterator: one partial per
+        # *partition*, not per batch
         states: dict[tuple, dict] = {}
         for pdf in batches:
             if pdf.empty:
                 continue
-            for key, sub in pdf.groupby(group_cols, sort=False, dropna=False):
+            groups = pdf.groupby(group_cols, sort=False, dropna=False) if group_cols else [((), pdf)]
+            for key, sub in groups:
                 key = key if isinstance(key, tuple) else (key,)
                 ent = states.get(key)
                 if ent is None:
@@ -187,28 +121,19 @@ def build_sketches_multi(
                         name: [spec.create(), 0, 0] for name, (spec, _) in spec_items
                     }
                 flats = {vc: _flatten_values(sub[vc]) for vc in value_cols}
-                # shared-hash fast path: every hash-keyed kind (bloom / hll /
-                # cms) derives all its indices from the same h1 = hash64(v),
-                # so hash each value column ONCE per batch and aggregate to
-                # (distinct hashes, counts) — the kernels then scatter over
-                # the distinct set only.  Bit-identical payloads (idempotent
-                # kinds ignore counts; cms adds them as weights); on Zipfian
-                # token batches this cuts the dominant hash + sort cost from
-                # once-per-kind to once-per-column.  pd.factorize (hash
-                # table) beats np.unique (sort) ~3x here, and no kernel
-                # depends on the distinct order.
+                # pd.factorize (hash table) beats np.unique (sort) ~3x here,
+                # and no kernel depends on the distinct order
                 hashed: dict[str, tuple[np.ndarray, np.ndarray]] = {}
                 for name, (spec, vc) in spec_items:
                     st = ent[name]
-                    fast = getattr(spec.module, "update_unique_hashes", None)
-                    if fast is not None:
+                    if name in shared:
                         if vc not in hashed:
                             codes, uniq = pd.factorize(hash64(flats[vc]))
                             hashed[vc] = (
                                 np.asarray(uniq, dtype=np.uint64),
                                 np.bincount(codes),
                             )
-                        fast(st[0], *hashed[vc])
+                        spec.module.update_unique_hashes(st[0], *hashed[vc])
                     else:
                         spec.update(st[0], flats[vc])
                     st[1] += len(sub)
@@ -220,25 +145,89 @@ def build_sketches_multi(
             for k, kinds in states.items()
             for name, (st, nrows, nitems) in kinds.items()
         ]
-        yield pd.DataFrame(rows, columns=[*group_cols, "kind", "sketch", "rows", "items"])
+        yield pd.DataFrame(rows, columns=[*group_cols, "kind", *_PAYLOAD_COLS])
 
-    partials = narrow.mapInPandas(partial_build, schema=out_schema)
+    return narrow.mapInPandas(partial_build, schema=schema)
+
+
+def tree_levels(partials: DataFrame, keys: list[str]) -> DataFrame:
+    """Middle merge levels over ``partials`` with ≤ 1 row per key per partition.
+
+    While more than ``MERGE_FANIN`` partitions (or level groups) remain, the
+    rows of ``MERGE_FANIN`` consecutive ones merge per key, so no merge task
+    ever folds more than ``MERGE_FANIN`` payloads of one key.  Counting the
+    partitions plans the input; under adaptive execution an input that
+    itself shuffles runs that shuffle first.
+    """
+    fanin = MERGE_FANIN
+    n = partials.rdd.getNumPartitions()
+    if n <= fanin:
+        return partials
+    df = partials.withColumn(_LEVEL, F.spark_partition_id())
+    while n > fanin:
+        df = merge_partials(df.withColumn(_LEVEL, F.floor(F.col(_LEVEL) / fanin)), [*keys, _LEVEL])
+        n = -(-n // fanin)
+    return df.drop(_LEVEL)
+
+
+def merge_partials(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One payload per ``keys`` group, keeping ``df``'s schema.
+
+    Payloads fold in the kind their header names; ``rows``/``items`` add up;
+    every other column takes its max (e.g. a streaming watermark).
+    """
+    extra = [c for c in df.columns if c not in (*keys, *_PAYLOAD_COLS)]
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        kind = pdf["kind"].iloc[0]
-        merged = specs[kind][0].merge_payloads(list(pdf["sketch"]))
-        head = pdf.iloc[[0]][group_cols + ["kind"]].reset_index(drop=True)
-        head["sketch"] = [merged]
+        head = pdf.iloc[:1].reset_index(drop=True)
+        head["sketch"] = [merge_payloads(list(pdf["sketch"]))]
         head["rows"] = [int(pdf["rows"].sum())]
         head["items"] = [int(pdf["items"].sum())]
+        for c in extra:
+            head[c] = [pdf[c].max()]
         return head
 
-    return partials.groupBy(*group_cols, "kind").applyInPandas(merge_group, schema=out_schema)
+    return df.groupBy(*keys).applyInPandas(merge_group, schema=df.schema)
+
+
+def build_sketches_multi(
+    df: DataFrame,
+    specs: dict[str, tuple[SketchSpec, str]],
+    group_cols: list[str] | None,
+) -> DataFrame:
+    """Build SEVERAL sketch kinds per group in ONE pass over the data.
+
+    ``specs``: {kind_name: (SketchSpec, value_col)}.  Returns a long-format
+    DataFrame[*group_cols, kind STRING, sketch BINARY, rows LONG, items LONG]
+    where ``rows`` counts input rows and ``items`` counts values fed to the
+    sketch (array columns contribute their element count).
+
+    Why: at 100 TB the scan IS the cost — five separate builds read the
+    input five times and pay five job/shuffle latencies.  One mapInPandas
+    maintains all states per group and the single merge shuffle carries
+    |partitions| x |groups| x |kinds| KB payloads.
+    """
+    group_cols = list(group_cols or [])
+    keys = [*group_cols, "kind"]
+    return merge_partials(tree_levels(_partials(df, specs, group_cols), keys), keys)
+
+
+def build_sketches(
+    df: DataFrame,
+    spec: SketchSpec,
+    group_cols: list[str] | None,
+    value_col: str,
+) -> DataFrame:
+    """Build one merged sketch per group over ``value_col``.
+
+    Returns DataFrame[*group_cols, sketch BINARY, rows LONG, items LONG].
+    """
+    return build_sketches_multi(df, {spec.kind: (spec, value_col)}, group_cols).drop("kind")
 
 
 def collect_sketches(result: DataFrame, spec: SketchSpec, group_cols: list[str] | None):
     """Driver-side: final payloads → {group_key: state} (cold-start load,
-    parity with /root/reference/service.go:42-100)."""
+    parity with the reference's service.go:42-100)."""
     group_cols = list(group_cols or [])
     rows = result.collect()
     if not group_cols:
@@ -253,51 +242,27 @@ def collect_sketches(result: DataFrame, spec: SketchSpec, group_cols: list[str] 
 
 # ---------------------------------------------------------------- query-side
 
+# kind → (point-query function, UDF return type)
+_POINT_QUERIES = {"bloom": ("contains", "boolean"), "cms": ("query", "long"), "freq": ("query", "long")}
 
-def make_membership_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a Bloom payload; return a vectorized membership pandas UDF.
 
-    Parity: query-time ``Test`` gate at /root/reference/service.go:224.
+def make_query_udf(spark: SparkSession, payload: bytes):
+    """Broadcast a payload; return a vectorized point-query pandas UDF.
+
+    Bloom answers membership (the query-time ``Test`` gate of the
+    reference's service.go:224); CMS and Misra–Gries answer estimated
+    counts — CMS never undercounts, MG never overcounts, so querying both
+    brackets the true frequency from both sides.
     """
-    from .sketches import bloom
+    kind, _ = deserialize_any(payload)
+    if kind not in _POINT_QUERIES:
+        raise ValueError(f"no point query for {kind!r} payloads; know {sorted(_POINT_QUERIES)}")
+    fn_name, return_type = _POINT_QUERIES[kind]
+    bc = spark.sparkContext.broadcast(bytes(payload))
 
-    bc = spark.sparkContext.broadcast(payload)
+    @F.pandas_udf(return_type)
+    def point_query(values: pd.Series) -> pd.Series:
+        module = module_for(kind)
+        return pd.Series(getattr(module, fn_name)(module.deserialize(bc.value), values.to_numpy()))
 
-    @F.pandas_udf("boolean")
-    def maybe_contains(values: pd.Series) -> pd.Series:
-        state = bloom.deserialize(bc.value)
-        return pd.Series(bloom.contains(state, values.to_numpy()))
-
-    return maybe_contains
-
-
-def make_cms_count_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a CMS payload; vectorized point-estimate pandas UDF."""
-    from .sketches import cms
-
-    bc = spark.sparkContext.broadcast(payload)
-
-    @F.pandas_udf("long")
-    def est_count(values: pd.Series) -> pd.Series:
-        state = cms.deserialize(bc.value)
-        return pd.Series(cms.query(state, values.to_numpy()))
-
-    return est_count
-
-
-def make_freq_count_udf(spark: SparkSession, payload: bytes):
-    """Broadcast a Misra–Gries payload; vectorized point-estimate UDF.
-
-    The MG dual of ``make_cms_count_udf``: CMS never undercounts, MG never
-    overcounts — querying both brackets the true frequency from both sides.
-    """
-    from .sketches import freq
-
-    bc = spark.sparkContext.broadcast(payload)
-
-    @F.pandas_udf("long")
-    def est_count(values: pd.Series) -> pd.Series:
-        state = freq.deserialize(bc.value)
-        return pd.Series(freq.query(state, values.to_numpy()))
-
-    return est_count
+    return point_query

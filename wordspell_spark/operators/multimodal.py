@@ -226,10 +226,9 @@ def _png_unfilter(raw: bytes, offset: int, height: int, stride: int, bpp: int) -
             cur = filt.copy()
         elif ftype == 2:  # Up
             cur = filt + prev  # uint8 arithmetic wraps mod 256, as the spec
-        elif ftype == 1:  # Sub — sequential along the row, per byte lane
-            cur = filt.copy()
-            for x in range(bpp, stride):
-                cur[x] += cur[x - bpp]
+        elif ftype == 1:  # Sub: a running sum mod 256 along each byte lane
+            # (stride is a multiple of bpp: sub-byte depths have bpp == 1)
+            cur = (np.cumsum(filt.reshape(-1, bpp), axis=0, dtype=np.uint64) & 0xFF).astype(np.uint8).ravel()
         elif ftype == 3:  # Average
             cur = filt.copy()
             for x in range(stride):

@@ -7,9 +7,9 @@ The wordspell-parity path (SURVEY.md §3.1/§3.2 steps 5-6):
   2-rune words) feeding Bloom geometry (X6).
 * ``build_deletion_bloom`` — A4: the flagship sketch build.  Partition-local
   partial Bloom filters over the SymSpell deletion neighborhoods of the
-  index vocabulary (hash-only, never materializes candidate strings), then a
-  bounded-fan-in tree merge (treeAggregate shape).  Parity:
-  /root/reference/builder.go:97-119.
+  index vocabulary (hash-only, never materializes candidate strings), then
+  the harness's bounded-fan-in tree levels and a driver-side
+  ``merge_payloads``.  Parity: the reference's builder.go:97-119.
 * ``IndexProbe`` — the executor-side word→weight lookup: sorted-hash arrays
   probed with np.searchsorted, broadcast once.  The Spark serving analogue of
   the reference's in-RAM index map (index/service.go:84-110) — a broadcast
@@ -35,11 +35,12 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions import mutate as M
 from ..functions import processors as PROC
-from ..sketches import bloom
+from ..harness import PAYLOAD_FIELDS, tree_levels
+from ..sketches import bloom, merge_payloads
 from ..sketches.hashing import hash64, row_hash_u32_matrix
 
 NUM_WEIGHT = 1000  # index/models.go:8
@@ -59,34 +60,6 @@ def deletes_estimated(index_df: DataFrame, word_col: str = "word") -> int:
     return int(index_df.select(est).first()[0] or 0)
 
 
-def tree_merge_payloads(partials: DataFrame, merge_fn, fanin: int = 64) -> bytes:
-    """Bounded-fan-in merge of a one-column [sketch BINARY] DataFrame.
-
-    Each level groups ≤fanin payloads per task (treeAggregate shape, X9) so
-    no single task ever materializes more than fanin payloads — the final
-    merge is never a driver bottleneck at 1000-executor scale.
-    """
-    schema = StructType([StructField("sketch", BinaryType(), False)])
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"sketch": [merge_fn(list(pdf["sketch"]))]})
-
-    df = partials
-    # ≤1 payload per input partition, so the partition count bounds the row
-    # count without triggering a count() job per tree level
-    n = df.rdd.getNumPartitions()
-    while n > fanin:
-        n_groups = max(1, n // fanin)
-        df = (
-            df.withColumn("__g", F.pmod(F.xxhash64(F.rand(seed=0)), F.lit(n_groups)))
-            .groupBy("__g")
-            .applyInPandas(lambda pdf: merge_group(pdf.drop(columns="__g")), schema=schema)
-        )
-        n = n_groups
-    payloads = [r["sketch"] for r in df.collect()]
-    return merge_fn(payloads)
-
-
 def build_deletion_bloom(
     index_df: DataFrame,
     word_col: str = "word",
@@ -95,28 +68,28 @@ def build_deletion_bloom(
 ) -> bytes:
     """Distributed A4: one Bloom over all ≤2-deletions of the vocabulary.
 
-    Stage A (mapInPandas): per-partition partial filter filled from
-    vectorized deletion hashes — no strings, no per-row Python.
-    Stage B: tree merge (bitwise OR) to a single payload.
+    Partial (mapInPandas): per-partition filter filled from vectorized
+    deletion hashes — no strings, no per-row Python.  Then the harness's
+    bounded-fan-in tree levels, and the final OR merge on the driver (a
+    grouped final stage measured slower for a single payload).
     """
     if n_estimate is None:
         n_estimate = max(64, deletes_estimated(index_df, word_col))
     m, k = bloom.optimal_m_k(n_estimate, fpr)
 
-    schema = StructType([StructField("sketch", BinaryType(), False)])
-
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         state = bloom.create(m=m, k=k)
-        seen = False
+        rows = items = 0
         for pdf in batches:
             if pdf.empty:
                 continue
-            seen = True
-            words = pdf[word_col].to_numpy()
-            mat, lens = M.encode_words(words)
-            bloom.update_hashes(state, M.deletion_hashes(mat, lens))
-        if seen:
-            yield pd.DataFrame({"sketch": [bloom.serialize(state)]})
+            mat, lens = M.encode_words(pdf[word_col].to_numpy())
+            hashes = M.deletion_hashes(mat, lens)
+            bloom.update_hashes(state, hashes)
+            rows += len(pdf)
+            items += len(hashes)
+        if rows:
+            yield pd.DataFrame({"sketch": [bloom.serialize(state)], "rows": [rows], "items": [items]})
 
     # partition by WORK GRAIN, not by the index's partition count: each task
     # fills ~1M deletion hashes (~a second of numpy), so a small thresholded
@@ -129,16 +102,8 @@ def build_deletion_bloom(
     n_parts = int(min(cur, max(1, n_estimate // 1_000_000)))
     if n_parts < cur:
         words = words.coalesce(n_parts)
-    partials = words.mapInPandas(partial, schema=schema)
-    spec_merge = lambda payloads: _or_merge(payloads)
-    return tree_merge_payloads(partials, spec_merge)
-
-
-def _or_merge(payloads: list[bytes]) -> bytes:
-    state = bloom.deserialize(payloads[0])
-    for p in payloads[1:]:
-        state = bloom.merge(state, bloom.deserialize(p))
-    return bloom.serialize(state)
+    partials = tree_levels(words.mapInPandas(partial, schema=StructType(PAYLOAD_FIELDS)), [])
+    return merge_payloads(r["sketch"] for r in partials.select("sketch").collect())
 
 
 # --------------------------------------------------------------- index probe

@@ -78,22 +78,39 @@ class SketchSpec:
 
     def merge_payloads(self, payloads) -> bytes:
         """Fold serialized payloads into one — the UDAF merge contract."""
-        it = iter(payloads)
-        state = self.deserialize(next(it))
-        for p in it:
-            state = self.merge(state, self.deserialize(p))
-        return self.serialize(state)
+        return _fold(self.module, payloads)
 
 
 def module_for(kind: str):
     return _MODULES[kind]
 
 
+def _kind_of(payload: bytes) -> str:
+    kind_id = serde.peek_kind(payload)
+    if kind_id not in serde.KIND_NAMES:
+        raise serde.SketchFormatError(f"unknown sketch kind id {kind_id}")
+    return serde.KIND_NAMES[kind_id]
+
+
+def _fold(module, payloads) -> bytes:
+    it = iter(payloads)
+    state = module.deserialize(next(it))
+    for p in it:
+        state = module.merge(state, module.deserialize(p))
+    return module.serialize(state)
+
+
 def deserialize_any(payload: bytes):
     """Dispatch on the payload header → (kind_name, state)."""
-    kind_id = serde.peek_kind(payload)
-    name = serde.KIND_NAMES[kind_id]
+    name = _kind_of(payload)
     return name, _MODULES[name].deserialize(payload)
+
+
+def merge_payloads(payloads) -> bytes:
+    """Fold payloads of one kind into one, the kind read from the first
+    header; every kind's ``deserialize`` rejects a foreign payload."""
+    payloads = list(payloads)
+    return _fold(_MODULES[_kind_of(payloads[0])], payloads)
 
 
 __all__ = [
@@ -109,4 +126,5 @@ __all__ = [
     "serde",
     "module_for",
     "deserialize_any",
+    "merge_payloads",
 ]

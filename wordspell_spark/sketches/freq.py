@@ -137,8 +137,8 @@ def query(state: FreqState, items) -> np.ndarray:
     """Estimated count per item (0 for untracked; true count <= est + dec).
 
     Query-side is LENIENT: nulls and non-int/str values return 0 instead
-    of raising (the make_freq_count_udf column may be nullable), matching
-    make_cms_count_udf's tolerate-anything behavior."""
+    of raising (a ``make_query_udf`` column may be nullable), matching
+    ``cms.query``'s tolerate-anything behavior."""
     arr = np.asarray(items)
     if arr.dtype.kind in "US":
         arr = arr.astype(object)

@@ -159,6 +159,8 @@ def deserialize(payload: bytes) -> TDigestState:
     if kind != serde.KIND_TDIGEST:
         raise serde.SketchFormatError(f"not a tdigest payload (kind={kind})")
     (delta,) = _PARAMS.unpack(params)
+    if not (np.isfinite(delta) and delta > 0):
+        raise serde.SketchFormatError(f"tdigest delta corrupt: {delta}")
     head = struct.calcsize("<dddI")
     n, min_v, max_v, ncent = struct.unpack_from("<dddI", body, 0)
     if len(body) != head + 16 * ncent:
@@ -169,10 +171,11 @@ def deserialize(payload: bytes) -> TDigestState:
     means = np.frombuffer(body[off : off + 8 * ncent], dtype="<f8").astype(np.float64)
     off += 8 * ncent
     weights = np.frombuffer(body[off : off + 8 * ncent], dtype="<f8").astype(np.float64)
-    # a legit state never holds NaN (update filters it) or non-positive
-    # weights — reject bit-rot instead of letting NaN poison later merges
-    if np.isnan(means).any() or np.isnan(weights).any() or (weights <= 0).any():
-        raise serde.SketchFormatError("tdigest centroids corrupt (NaN or weight <= 0)")
+    # a legit state never holds NaN/inf (update filters NaN; a mean of finite
+    # values is finite) or non-positive weights — reject bit-rot instead of
+    # letting it poison later merges
+    if not (np.isfinite(means).all() and np.isfinite(weights).all()) or (weights <= 0).any():
+        raise serde.SketchFormatError("tdigest centroids corrupt (non-finite or weight <= 0)")
     if not (n >= 0) or np.isnan(min_v) or np.isnan(max_v):
         raise serde.SketchFormatError("tdigest summary stats corrupt")
     return TDigestState(delta, means, weights, [], n, min_v, max_v)
