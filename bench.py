@@ -8,7 +8,7 @@ north-rule throughput figure (sketch-build tokens/sec over the tokenized
 ``sequences`` table) is reported alongside in ``extra``; the two-parallelism
 scaling-efficiency evidence lives in tools/scaling_bench.py → BENCH.md.
 
-Run:  python bench.py            (sf0.1, local[$SPARK_GRAFT_CPUS or 32])
+Run:  python bench.py            (sf0.1, local[$SPARK_GRAFT_CPUS or the host's CPUs])
 """
 
 from __future__ import annotations
@@ -21,7 +21,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))))
+# half the host's physical RAM, capped at the 24 GiB the bench was first
+# sized with: the rest is for the Python workers (one per task slot) and the
+# page cache the Parquet scans read through
+DRIVER_MEMORY_GB = max(1, min(24, os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31))
 SEQ_ROWS = int(os.environ.get("WORDSPELL_BENCH_SEQ_ROWS", "200000"))
 
 
@@ -36,7 +40,7 @@ def build_spark(cpus: int):
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.driver.memory", "24g")
+        .config("spark.driver.memory", f"{DRIVER_MEMORY_GB}g")
         # a long bench session generates hundreds of whole-stage-codegen
         # classes; the JVM's default 240 MB reserved code cache fills late
         # in the run and hot loops silently fall back to the interpreter —

@@ -261,6 +261,23 @@ def test_flatten_values_null_first_row(spark):
     assert out[0]["items"] == 5 and out[0]["rows"] == 3
 
 
+def test_null_elements_and_all_null_groups(spark):
+    """Null elements inside token lists are dropped like null rows, and a
+    group whose lists are all empty or null builds empty sketches."""
+    from wordspell_spark.harness import build_sketches_multi
+
+    df = spark.createDataFrame(
+        [("a", ["x", None, "y"]), ("a", ["x"]), ("b", ["x", "y"]), ("b", ["x"]),
+         ("e", []), ("e", None)],
+        "source string, tokens array<string>",
+    ).coalesce(1)
+    specs = {k: (SketchSpec(k), "tokens") for k in ("bloom", "hll", "cms", "theta", "freq", "sample")}
+    got = {(r["source"], r["kind"]): bytes(r["sketch"]) for r in build_sketches_multi(df, specs, ["source"]).collect()}
+    for kind, (spec, _) in specs.items():
+        assert got[("a", kind)] == got[("b", kind)], kind
+        assert got[("e", kind)] == spec.serialize(spec.create()), kind
+
+
 class TestSecondaryOracles:
     """SURVEY §7 step 4: cross-check our sketches against Spark's OWN
     approximate aggregates — two independent implementations of the same

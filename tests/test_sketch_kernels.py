@@ -80,12 +80,12 @@ class TestBloom:
         st = bloom.create(3000, 0.01)
         bloom.update(st, tokens)
         assert bloom.contains(st, tokens).all()
-        # row path: 3-grams as uint32 matrix
-        mat = RNG.integers(0, 50_000, size=(500, 3)).astype(np.uint32)
-        st2 = bloom.create(500, 0.01)
-        bloom.update_u32_rows(st2, mat)
+        # row path: 3-grams as uint32 matrix, inserted pre-hashed
         from wordspell_spark.sketches.hashing import row_hash_u32_matrix
 
+        mat = RNG.integers(0, 50_000, size=(500, 3)).astype(np.uint32)
+        st2 = bloom.create(500, 0.01)
+        bloom.update_hashes(st2, row_hash_u32_matrix(mat))
         assert bloom.contains_hashes(st2, row_hash_u32_matrix(mat)).all()
 
     def test_padding_does_not_alias(self):
@@ -96,18 +96,9 @@ class TestBloom:
         h = row_hash_u32_matrix(mat, valid_len=np.array([2, 3]))
         assert h[0] != h[1]
 
-    def test_dedupe_flag_is_bit_identical(self):
-        """update_hashes(dedupe=False) must build the exact same filter —
-        the deletion-bloom fast path relies on bit-set idempotence."""
-        h = RNG.integers(0, 2**63, size=20_000, dtype=np.uint64)
-        h = np.concatenate([h, h[:5000]])  # real duplicates too
-        a = bloom.update_hashes(bloom.create(20_000, 0.01), h, dedupe=True)
-        b = bloom.update_hashes(bloom.create(20_000, 0.01), h, dedupe=False)
-        assert (a.bits == b.bits).all()
-
     def test_float_dedupe_keeps_bit_distinct_values(self):
-        """±0.0 hash differently (bit-pattern hash); the idempotent-update
-        dedupe must not collapse them (round-2 ADVICE, hll.py:84)."""
+        """±0.0 hash differently (bit-pattern hash); the ``distinct`` step
+        must not collapse them (round-2 ADVICE)."""
         from wordspell_spark.sketches.hashing import double_hash
 
         vals = np.array([0.0, -0.0, 0.0, -0.0, 1.5])
@@ -119,15 +110,12 @@ class TestBloom:
         assert (st.bits == ref.bits).all()
         # HLL: two bit-distinct zeros count as two distinct values
         sh = hll.update(hll.create(p=12), np.array([0.0, -0.0, 0.0, -0.0]))
-        ref_h = hll.update_hashes(hll.create(p=12), np.concatenate(
-            [self._hash1(0.0), self._hash1(-0.0)]))
+        ref_h = hll.create(p=12)
+        for v in [0.0, -0.0]:
+            hll.update(ref_h, np.array([v]))
         assert (sh.registers == ref_h.registers).all()
-
-    @staticmethod
-    def _hash1(v: float) -> np.ndarray:
-        from wordspell_spark.sketches.hashing import hash64
-
-        return hash64(np.array([v]))
+        zero_only = hll.update(hll.create(p=12), np.array([0.0]))
+        assert (sh.registers != zero_only.registers).any()
 
 
 # ---------------------------------------------------------------- hll
@@ -345,10 +333,12 @@ class TestCms:
         assert frac_over <= 1e-3 + 0.01, f"{frac_over:.4f} of keys exceed eps*N bound"
 
     def test_weighted_update_matches_repeat(self):
+        from wordspell_spark.sketches.hashing import Distinct, hash64
+
         st1 = cms.create(width=1000, depth=4)
         cms.update(st1, np.array([7, 7, 7, 9]))
         st2 = cms.create(width=1000, depth=4)
-        cms.update(st2, np.array([7, 9]), weights=np.array([3, 1]))
+        cms.update_distinct(st2, Distinct(np.array([7, 9]), np.array([3, 1]), hash64(np.array([7, 9]))))
         assert (st1.counts == st2.counts).all() and st1.total == st2.total
 
     def test_merge_linear_and_associative(self):
@@ -813,44 +803,49 @@ class TestSerdeRobustness:
 
 
 class TestSharedHashFastPath:
-    """The multi-kind harness hashes each batch once and feeds every
-    hash-keyed kind (bloom / hll / cms) the same (distinct hashes, counts)
-    aggregate via ``update_unique_hashes``.  That is only sound if the fast
-    path is BIT-IDENTICAL to the per-value ``update`` — pin it per kind,
-    over Zipfian (mostly-repeat), near-unique, and empty batches."""
+    """The harness reduces each (batch, group, column) once with
+    ``hashing.distinct`` and feeds that one reduction to every
+    order-insensitive kind's ``update_distinct``.  That is only sound if
+    ``update(batch)`` is BIT-IDENTICAL to the kernel folded one value at a
+    time — pin it per kind over Zipfian (mostly-repeat), near-unique, empty
+    and ±0.0 batches."""
 
     @staticmethod
-    def _batches():
-        import numpy as np
-
+    def _streams(kind: str) -> list:
         rng = np.random.default_rng(41)
-        vocab = np.array([f"tok{i}" for i in range(5000)], dtype=object)
-        zipf = vocab[np.clip(rng.zipf(1.3, 20000) - 1, 0, len(vocab) - 1)]
-        uniq = np.array([f"u{i}" for i in range(7000)], dtype=object)
-        return [zipf, uniq, np.array([], dtype=object), vocab[:17]]
+        vocab = np.array([f"tok{i}" for i in range(500)], dtype=object)
+        zipf = vocab[np.clip(rng.zipf(1.3, 1500) - 1, 0, len(vocab) - 1)]
+        uniq = np.array([f"u{i}" for i in range(500)], dtype=object)
+        int_zipf = np.clip(rng.zipf(1.3, 1000), 0, 5000).astype(np.int32)
+        streams = [
+            [zipf, uniq, np.array([], dtype=object), vocab[:17]],
+            [int_zipf, np.array([], dtype=np.int32), -int_zipf[:50]],
+        ]
+        if kind not in ("freq", "sample"):  # value kinds hold int/str only
+            streams.append([np.array([0.0, -0.0, 1.5, 0.0, -0.0, 2.5, 1.5])])
+        return streams
 
     @pytest.mark.parametrize(
         "kind,params",
         [
-            ("bloom", {"n_estimate": 20000}),
-            ("hll", {"p": 12}),
+            ("bloom", {"n_estimate": 5000}),
+            ("hll", {"p": 10}),
             ("cms", {"width": 2048, "depth": 5}),
-            ("theta", {"k": 1024}),
+            ("theta", {"k": 256}),  # estimating on the string stream
+            ("freq", {"k": 2048}),  # above the distinct count: no MG trim
+            ("sample", {"k": 256}),  # estimating on the string stream
         ],
     )
     def test_bit_identical_to_per_value_update(self, kind, params):
-        import pandas as pd
-
-        from wordspell_spark.sketches.hashing import hash64
-
         spec = SketchSpec(kind, params)
-        slow, fast = spec.create(), spec.create()
-        fast_update = getattr(spec.module, "update_unique_hashes")
-        for batch in self._batches():
-            spec.update(slow, batch)
-            codes, uh = pd.factorize(hash64(batch))
-            fast_update(fast, np.asarray(uh, dtype=np.uint64), np.bincount(codes))
-        assert spec.serialize(slow) == spec.serialize(fast)
+        assert spec.order_insensitive
+        for stream in self._streams(kind):
+            batched, folded = spec.create(), spec.create()
+            for batch in stream:
+                spec.update(batched, batch)
+                for i in range(batch.size):
+                    spec.update(folded, batch[i : i + 1])
+            assert spec.serialize(batched) == spec.serialize(folded)
 
     def test_harness_multi_build_uses_fast_path(self, spark):
         """End-to-end: the Spark multi-kind build over a token column yields
@@ -896,3 +891,93 @@ class TestSharedHashFastPath:
                         assert st.dec <= st.n // (st.k + 1) + 1
                 else:
                     assert multi[(src, kind)] == payload, (kind, src)
+
+
+class TestDistinct:
+    """``hashing.distinct``: the one dedupe step in front of every
+    order-insensitive kernel, and the kernels' side of its contract."""
+
+    @pytest.mark.parametrize(
+        "kind,params",
+        [
+            ("bloom", {"n_estimate": 100}),
+            ("hll", {"p": 8}),
+            ("theta", {"k": 16}),
+            ("cms", {"width": 64, "depth": 3}),
+        ],
+    )
+    def test_hash_keyed_kinds_safe_for_duplicate_hashes(self, kind, params):
+        """Two distinct values colliding on 64 bits arrive as two entries
+        with one hash; the payload must equal one entry carrying both
+        counts."""
+        from wordspell_spark.sketches.hashing import Distinct
+
+        spec = SketchSpec(kind, params)
+        h = np.array([12345, 12345], dtype=np.uint64)
+        twice = spec.update_distinct(spec.create(), Distinct(np.array(["a", "b"]), np.array([2, 3]), h))
+        once = spec.update_distinct(spec.create(), Distinct(np.array(["a"]), np.array([5]), h[:1]))
+        assert spec.serialize(twice) == spec.serialize(once)
+
+    def test_value_kinds_keep_colliding_values_apart(self):
+        """The kernel side of the contract, on a hand-built batch:
+        ``distinct`` itself hands over one value per hash class."""
+        from wordspell_spark.sketches.hashing import Distinct
+
+        d = Distinct(np.array(["b", "a"]), np.array([3, 2]), np.array([7, 7], dtype=np.uint64))
+        fr = freq.update_distinct(freq.create(k=8), d)
+        assert fr.counters == {"a": 2, "b": 3} and fr.n == 5
+        # bottom-k keeps one value per hash: the smaller, whatever the order
+        sm = sample.update_distinct(sample.create(k=16), d)
+        assert sample.sample(sm) == ["a"] and sm.hashes.tolist() == [7]
+
+    @pytest.mark.parametrize("kind", ["bloom", "hll", "cms", "theta", "freq", "sample", "kll", "tdigest"])
+    def test_update_skips_nulls(self, kind):
+        """Direct ``update`` drops None and NaN for every kind, as the
+        harness's flatten step always did."""
+        spec = SketchSpec(kind)
+        if kind in ("kll", "tdigest"):
+            dirty, clean = np.array([None, 1.0, np.nan, 2.0], dtype=object), np.array([1.0, 2.0])
+        else:
+            dirty = np.array([None, "a", np.nan, "b", None], dtype=object)
+            clean = np.array(["a", "b"], dtype=object)
+        got = spec.update(spec.create(), dirty)
+        assert spec.serialize(got) == spec.serialize(spec.update(spec.create(), clean))
+        if kind == "bloom":
+            assert not bloom.contains(got, ["None"]).any()
+        if kind in ("bloom", "hll", "cms", "theta"):  # numeric NaN too
+            got = spec.update(spec.create(), np.array([np.nan, 1.5, np.nan]))
+            assert spec.serialize(got) == spec.serialize(spec.update(spec.create(), np.array([1.5])))
+
+    @pytest.mark.parametrize("kind", ["bloom", "hll", "cms", "theta", "freq", "sample"])
+    @pytest.mark.parametrize(
+        "batch", [np.empty(0), np.array([np.nan]), [], np.array([None], dtype=object)],
+        ids=["empty-float", "nan", "list", "none"],
+    )
+    def test_empty_or_all_null_batch_is_a_no_op(self, kind, batch):
+        """An all-null batch reduces to an empty ``distinct`` of whatever
+        dtype it came in (the harness flattens an all-null group to an
+        empty float64 array); every kind must leave its state as it was."""
+        spec = SketchSpec(kind)
+        got = spec.update(spec.create(), batch)
+        assert spec.serialize(got) == spec.serialize(spec.create())
+
+    def test_mixed_object_batch_hashes_first(self):
+        """``1``, ``1.0`` and ``True`` are equal as values but hash apart;
+        deduping on values would keep one of them and the Bloom would miss
+        the others."""
+        batch = np.array([1, 1.0, True, "1", b"x"], dtype=object)
+        st = bloom.update(bloom.create(1000, 0.01), batch)
+        assert bloom.contains(st, batch).all()
+
+    def test_counts_and_hashes(self):
+        from wordspell_spark.sketches.hashing import distinct, hash64
+
+        for vals, counts in (
+            (np.array(["x", "y", "x", None, "x"], dtype=object), [1, 3]),
+            (np.array([3, -1, 3, 3], dtype=np.int32), [1, 3]),
+            (np.array([0.0, -0.0, np.nan, 0.0]), [1, 2]),  # ±0.0 apart, NaN dropped
+        ):
+            d = distinct(vals)
+            assert (d.hashes == hash64(d.values)).all()
+            assert np.unique(d.hashes).size == d.hashes.size
+            assert sorted(d.counts.tolist()) == counts

@@ -7,6 +7,9 @@ generalization of the reference's partial→final additive accumulator merge
 
     partial  ``_partials``: mapInPandas over input partitions, one payload
              per (group key, kind) per partition — the map-side combine.
+             Each (batch, group, column) is reduced once by
+             ``hashing.distinct``; every order-insensitive kind ingests that
+             with ``update_distinct``, kll / t-digest ingest raw values.
              Output is tiny: ≤ |groups| × |kinds| rows per partition.
     tree     ``tree_levels``: while more than ``MERGE_FANIN`` partitions
              remain, the partials of ``MERGE_FANIN`` consecutive partitions
@@ -30,7 +33,6 @@ Python anywhere: kernels consume whole Arrow batches as numpy arrays.
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -46,7 +48,7 @@ from pyspark.sql.types import (
 )
 
 from .sketches import SketchSpec, deserialize_any, merge_payloads, module_for
-from .sketches.hashing import hash64
+from .sketches.hashing import Distinct, distinct
 
 MERGE_FANIN = 64  # most payloads per key one merge task reads
 PAYLOAD_FIELDS = [
@@ -86,6 +88,12 @@ def _partials(
 ) -> DataFrame:
     """One partial per (group key, kind) per partition, all kinds in one pass.
 
+    Per (batch, group) each value column is flattened once and, on its first
+    use by an order-insensitive kind, reduced once by ``distinct`` (nulls
+    dropped, one entry per ``hash64`` class with its count); every such kind
+    reading that column ingests the same reduction.  kll and t-digest depend
+    on insertion order and get the flattened values.
+
     Returns DataFrame[*group_cols, kind, sketch, rows, items].
     """
     value_cols = sorted({vc for _, vc in specs.values()})
@@ -95,15 +103,6 @@ def _partials(
         + [StructField("kind", StringType(), False), *PAYLOAD_FIELDS]
     )
     spec_items = sorted(specs.items())  # deterministic kind order
-    # shared-hash path: every hash-keyed kind (bloom / hll / cms / theta)
-    # derives all its indices from h1 = hash64(v), so a column read by two
-    # or more of them is hashed ONCE per batch and aggregated to (distinct
-    # hashes, counts) — bit-identical payloads (idempotent kinds ignore
-    # counts; cms adds them as weights).  A lone hash-keyed kind is faster
-    # on its own ``update``, which skips the factorize.
-    hash_keyed = {n for n, (spec, _) in spec_items if hasattr(spec.module, "update_unique_hashes")}
-    readers = Counter(specs[n][1] for n in hash_keyed)
-    shared = {n for n in hash_keyed if readers[specs[n][1]] > 1}
 
     def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # states persist across the batch iterator: one partial per
@@ -121,19 +120,13 @@ def _partials(
                         name: [spec.create(), 0, 0] for name, (spec, _) in spec_items
                     }
                 flats = {vc: _flatten_values(sub[vc]) for vc in value_cols}
-                # pd.factorize (hash table) beats np.unique (sort) ~3x here,
-                # and no kernel depends on the distinct order
-                hashed: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+                dists: dict[str, Distinct] = {}
                 for name, (spec, vc) in spec_items:
                     st = ent[name]
-                    if name in shared:
-                        if vc not in hashed:
-                            codes, uniq = pd.factorize(hash64(flats[vc]))
-                            hashed[vc] = (
-                                np.asarray(uniq, dtype=np.uint64),
-                                np.bincount(codes),
-                            )
-                        spec.module.update_unique_hashes(st[0], *hashed[vc])
+                    if spec.order_insensitive:
+                        if vc not in dists:
+                            dists[vc] = distinct(flats[vc])
+                        spec.update_distinct(st[0], dists[vc])
                     else:
                         spec.update(st[0], flats[vc])
                     st[1] += len(sub)

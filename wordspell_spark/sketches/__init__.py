@@ -10,10 +10,26 @@ reference's Bloom component Add/Test/Reset/Save/Load surface at
     serialize(state) -> bytes                           # versioned LE payload
     deserialize(payload: bytes) -> state
 
-plus kind-specific query functions (``contains``, ``estimate``, ``query``,
-``quantile``).  ``SketchSpec`` captures (kind, params) so partial builders on
-executors construct byte-compatible states, mirroring the reference fixing
-filter geometry up front (component.go:60-68).
+Every order-insensitive kind (bloom, hll, cms, theta, freq, sample) has one
+ingest core,
+
+    update_distinct(state, d: hashing.Distinct) -> state
+
+fed the batch's distinct values with their counts and hashes, and its
+``update(state, values)`` is ``update_distinct(state, distinct(values))``.
+``distinct`` drops nulls and keeps one entry per ``hash64`` class, so the
+harness runs it once per column and shares it across kinds.  Each kernel
+must stay correct when two entries share a hash.  The value-carrying kinds
+(freq, sample) are therefore keyed by hash class when fed through
+``distinct``: two values colliding on 64 bits in one batch of n distinct
+values (chance about n^2 / 2^65) reach them as one value.  kll and
+t-digest depend on insertion order and have only ``update``.
+
+Kernels also have kind-specific query functions (``contains``,
+``estimate``, ``query``, ``quantile``).  ``SketchSpec`` captures (kind,
+params) so partial builders on executors construct byte-compatible states,
+mirroring the reference fixing filter geometry up front
+(component.go:60-68).
 """
 
 from __future__ import annotations
@@ -64,8 +80,17 @@ class SketchSpec:
     def create(self):
         return self.module.create(**self.params)
 
+    @property
+    def order_insensitive(self) -> bool:
+        """True for kinds whose state ignores insertion order and that
+        therefore ingest ``distinct`` batches."""
+        return hasattr(self.module, "update_distinct")
+
     def update(self, state, values):
         return self.module.update(state, values)
+
+    def update_distinct(self, state, d):
+        return self.module.update_distinct(state, d)
 
     def merge(self, a, b):
         return self.module.merge(a, b)

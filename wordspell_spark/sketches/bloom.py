@@ -30,7 +30,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import dedupe_values, double_hash, row_hash_u32_matrix, splitmix64
+from .hashing import Distinct, distinct, double_hash, splitmix64
 
 DEFAULT_FPR = 0.005  # reference default, component.go:16
 
@@ -88,58 +88,25 @@ def _test_bits(state: BloomState, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
 
 
 def update(state: BloomState, values) -> BloomState:
-    """Insert a batch of values (str / bytes / int / float array).
-
-    Duplicate values are dropped before hashing (numeric batches) or before
-    the k-probe scatter (string batches) — bit-setting is idempotent and
-    Zipfian batches are mostly repeats, so this cuts the dominant hash +
-    random-write cost by the batch's duplication factor."""
-    vals = np.asarray(values)
-    if vals.dtype.kind in "iuf":
-        h1, h2 = double_hash(dedupe_values(vals))
-        _set_bits(state, h1, h2)
-        return state
-    h1, h2 = double_hash(values)
-    u1, first = np.unique(h1, return_index=True)
-    _set_bits(state, u1, h2[first])
-    return state
+    """Insert a batch of values (str / bytes / int / float array); nulls
+    are skipped."""
+    return update_distinct(state, distinct(values))
 
 
-def update_hashes(state: BloomState, h1: np.ndarray, *, dedupe: bool = True) -> BloomState:
-    """Insert pre-hashed 64-bit keys (e.g. row_hash_u32_matrix output).
+def update_distinct(state: BloomState, d: Distinct) -> BloomState:
+    """Insert a ``distinct`` batch.  Bit-setting is idempotent, so only the
+    hashes matter and Zipfian batches pay the k-probe scatter once per
+    distinct value; ``counts`` are ignored."""
+    return update_hashes(state, d.hashes)
 
-    ``dedupe=True`` (default) drops repeated hashes before the k-probe
-    scatter — a 10× win on Zipfian token batches where the batch is mostly
-    repeats.  Callers whose hashes are already near-distinct (the SymSpell
-    deletion-neighborhood path) pass ``dedupe=False``: there the O(n log n)
-    sort is pure overhead and bit-setting is idempotent anyway, so the
-    filter contents are identical either way.
-    """
+
+def update_hashes(state: BloomState, h1: np.ndarray) -> BloomState:
+    """Insert pre-hashed 64-bit keys (e.g. ``row_hash_u32_matrix`` rows of
+    the SymSpell deletion neighbourhood).  Repeats are harmless — setting a
+    bit twice is a no-op — so no dedupe sort runs here."""
     h1 = h1.astype(_U64, copy=False)
-    if dedupe:
-        h1 = np.unique(h1)
     _set_bits(state, h1, splitmix64(h1) | _U64(1))
     return state
-
-
-def update_unique_hashes(state: BloomState, uh: np.ndarray, counts: np.ndarray | None = None) -> BloomState:
-    """Shared-hash fast path (multi-kind harness): ``uh`` are DISTINCT
-    ``hash64`` keys of the batch.  ``counts`` is accepted for signature
-    uniformity across kinds and ignored — bit-setting is idempotent.
-    Bit-identical to ``update(values)``: every probe index derives from h1."""
-    return update_hashes(state, uh, dedupe=False)
-
-
-def update_u32_rows(state: BloomState, mat: np.ndarray, valid_len: np.ndarray | None = None) -> BloomState:
-    """Insert each row of a (n, L) uint32 matrix as one set element.
-
-    This is the fast path for SymSpell deletion neighborhoods: candidate
-    generation emits codepoint/token matrices and we never materialize
-    Python strings (input_hint: no per-row Python).  Deletion neighborhoods
-    of distinct words are near-distinct, so the idempotent-update dedupe is
-    skipped (measured: the sort costs ~10% on unique batches, saves nothing).
-    """
-    return update_hashes(state, row_hash_u32_matrix(mat, valid_len), dedupe=False)
 
 
 def contains(state: BloomState, values) -> np.ndarray:

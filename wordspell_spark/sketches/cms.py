@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import double_hash, splitmix64
+from .hashing import Distinct, distinct, double_hash, splitmix64
 
 _U64 = np.uint64
 _PARAMS = struct.Struct("<II")  # width, depth
@@ -61,44 +61,30 @@ def _row_idx(h1: np.ndarray, h2: np.ndarray, d: int, width: int) -> np.ndarray:
     return ((h1 + _U64(d) * h2) % _U64(width)).astype(np.int64)
 
 
-def update(state: CmsState, values, weights=None) -> CmsState:
-    """Add a batch of values with optional integer weights (default 1)."""
-    h1, h2 = double_hash(values)
-    n = h1.size
-    if n == 0:
+def update(state: CmsState, values) -> CmsState:
+    """Add a batch of values, each with weight 1; nulls are skipped."""
+    return update_distinct(state, distinct(values))
+
+
+def update_distinct(state: CmsState, d: Distinct) -> CmsState:
+    """Add a ``distinct`` batch, each class weighted by its count.
+
+    Every bucket index derives from (h1, h2 = splitmix64(h1)|1), so the
+    weighted bincount over the distinct hashes adds exactly the totals a
+    per-value pass would — and two distinct values sharing a hash simply
+    add both their counts.  The bincounts run over the distinct set only:
+    on Zipfian token batches that is 4-15x fewer index rows per depth."""
+    h1 = d.hashes
+    if h1.size == 0:
         return state
+    h2 = splitmix64(h1) | _U64(1)
     # bincount is the C fast path (np.add.at is ~20x slower); counts stay
     # exact — weighted bincount returns float64 but values are integral and
     # far below 2^53
-    w = None if weights is None else np.asarray(weights, dtype=np.int64)
-    for d in range(state.depth):
-        idx = _row_idx(h1, h2, d, state.width)
-        if w is None:
-            state.counts[d] += np.bincount(idx, minlength=state.width).astype(np.int64)
-        else:
-            state.counts[d] += np.bincount(idx, weights=w, minlength=state.width).astype(np.int64)
-    state.total += n if w is None else int(w.sum())
-    return state
-
-
-def update_unique_hashes(state: CmsState, uh: np.ndarray, counts: np.ndarray) -> CmsState:
-    """Shared-hash fast path (multi-kind harness): ``uh`` are the batch's
-    DISTINCT ``hash64`` keys, ``counts`` their multiplicities.
-
-    Table-identical to ``update(values)``: every bucket index derives from
-    (h1, h2 = splitmix64(h1)|1), and the weighted bincount adds exactly the
-    per-key occurrence totals the unweighted path accumulates one by one.
-    The bincounts also run over the distinct set only — on Zipfian token
-    batches that is 4-15x fewer index rows per depth."""
-    n = uh.size
-    if n == 0:
-        return state
-    h1 = uh.astype(_U64, copy=False)
-    h2 = splitmix64(h1) | _U64(1)
-    w = np.asarray(counts, dtype=np.int64)
-    for d in range(state.depth):
-        idx = _row_idx(h1, h2, d, state.width)
-        state.counts[d] += np.bincount(idx, weights=w, minlength=state.width).astype(np.int64)
+    w = d.counts
+    for row in range(state.depth):
+        idx = _row_idx(h1, h2, row, state.width)
+        state.counts[row] += np.bincount(idx, w, minlength=state.width).astype(np.int64)
     state.total += int(w.sum())
     return state
 

@@ -17,9 +17,9 @@ count from every counter and drops the non-positive ones: at least k+1
 counters each lose the full subtracted amount, which is what caps ``dec``.
 
 Values may be int64-like or strings (token ids or tokens).  Updates are
-batch-vectorized: one ``np.unique(return_counts=True)`` per Arrow batch,
-then a dict merge over the DISTINCT items only (Zipfian batches shrink
-4-10x), never per-row Python.
+batch-vectorized: one ``hashing.distinct`` per Arrow batch, then a dict
+merge over the DISTINCT items only (Zipfian batches shrink 4-10x), never
+per-row Python.
 """
 
 from __future__ import annotations
@@ -28,10 +28,9 @@ import struct
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 
 from . import serde
-from .hashing import normalize_items as _normalize_keys
+from .hashing import Distinct, distinct, normalize_items as _normalize_keys
 
 DEFAULT_K = 256
 
@@ -59,37 +58,23 @@ def create(k: int = DEFAULT_K) -> FreqState:
 
 
 def update(state: FreqState, values) -> FreqState:
-    vals = np.asarray(values)
-    if vals.size == 0:
+    """Add a batch of int or str values; nulls are skipped."""
+    return update_distinct(state, distinct(values))
+
+
+def update_distinct(state: FreqState, d: Distinct) -> FreqState:
+    """Add a ``distinct`` batch: each representative value with its count.
+    Counters are keyed by value and the trim is count-based, so the order
+    of the entries never matters.  ``distinct`` hands over one value per
+    ``hash64`` class, so through ``update`` two values colliding on 64 bits
+    (chance about n^2 / 2^65 for a batch of n distinct values) share the
+    first-seen value's counter."""
+    if d.counts.size == 0:  # an all-null batch may arrive as empty float64
         return state
-    vals = vals[_non_null_mask(vals)]
-    if vals.size == 0:
-        return state
-    # factorize (hash table) beats np.unique (comparison sort) ~7x on
-    # Zipfian string batches; the resulting counters are identical either
-    # way (trim is count-based, dict order never matters numerically)
-    codes, uniq = pd.factorize(vals)
-    cnts = np.bincount(codes)
-    return update_counts(state, _normalize_keys(np.asarray(uniq)), cnts)
-
-
-def _non_null_mask(vals: np.ndarray) -> np.ndarray:
-    if vals.dtype == object:
-        return np.array([v is not None and v == v for v in vals], dtype=bool)
-    if vals.dtype.kind == "f":
-        return ~np.isnan(vals)
-    return np.ones(vals.size, dtype=bool)
-
-
-def update_counts(state: FreqState, items: list, counts) -> FreqState:
-    """Pre-aggregated update: DISTINCT items with their batch counts."""
     c = state.counters
-    total = 0
-    for it, cnt in zip(items, counts):
-        cnt = int(cnt)
-        total += cnt
+    for it, cnt in zip(_normalize_keys(d.values), d.counts.tolist()):
         c[it] = c.get(it, 0) + cnt
-    state.n += total
+    state.n += int(d.counts.sum())
     _trim(state)
     return state
 

@@ -21,6 +21,8 @@ for power-of-two and prime table sizes alike.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
 
@@ -56,18 +58,43 @@ def hash64(values) -> np.ndarray:
     return pd.util.hash_array(arr, hash_key=_HASH_KEY_1)
 
 
-def dedupe_values(vals: np.ndarray) -> np.ndarray:
-    """Value-level dedupe that distinguishes exactly what hash64 distinguishes.
+class Distinct(NamedTuple):
+    """A batch reduced to one entry per ``hash64`` class (see ``distinct``)."""
 
-    Floats are deduped on the raw float64 bit pattern so +0.0 / -0.0 (and
-    distinct NaN payloads) stay separate — ``hash64`` hashes bits, not
-    numeric equality, and an idempotent-update dedupe must not collapse
-    values the hash would have kept apart.
+    values: np.ndarray  # one representative value per class
+    counts: np.ndarray  # int64 multiplicity of each class in the batch
+    hashes: np.ndarray  # uint64 hash64 of each representative
+
+
+def distinct(values) -> Distinct:
+    """Drop nulls (None / NaN / NA), then reduce a batch to its distinct
+    values with counts.
+
+    The one dedupe step in front of every order-insensitive kernel
+    (``update_distinct``): it tells apart exactly what ``hash64`` tells
+    apart.  Numeric batches are deduped on their canonical bit pattern —
+    floats as their u64 view, so +0.0 / -0.0 stay separate.  Object and
+    string batches are hashed first and deduped on the hashes: value
+    equality merges ``1``, ``1.0`` and ``True``, which ``hash64`` keeps
+    apart, and a Bloom fed only one of them would miss the others.
     """
-    if vals.dtype.kind == "f":
-        v = np.ascontiguousarray(vals, dtype=np.float64)
-        return np.unique(v.view(_U64)).view(np.float64)
-    return np.unique(vals)
+    arr = np.asarray(values)
+    if arr.dtype.kind in "OUS":
+        if arr.dtype == object:
+            arr = arr[~pd.isna(arr)]
+        h = hash64(arr)
+        codes, uniq = pd.factorize(h)
+        # codes number the classes in order of first appearance, so a class
+        # first appears exactly where the running max of codes steps up
+        first = np.flatnonzero(np.diff(np.maximum.accumulate(codes), prepend=-1))
+        return Distinct(arr[first], np.bincount(codes).astype(np.int64), uniq.astype(_U64, copy=False))
+    if arr.dtype.kind == "f":
+        arr = np.ascontiguousarray(arr[~np.isnan(arr)], dtype=np.float64)
+        bits, counts = np.unique(arr.view(_U64), return_counts=True)
+        uniq = bits.view(np.float64)
+    else:
+        uniq, counts = np.unique(arr, return_counts=True)
+    return Distinct(uniq, counts.astype(np.int64, copy=False), hash64(uniq))
 
 
 def normalize_items(uniq: np.ndarray) -> list:

@@ -21,7 +21,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import dedupe_values, hash64
+from .hashing import Distinct, distinct
 
 DEFAULT_P = 14  # m = 16384 registers → RSE ≈ 0.81%
 
@@ -66,33 +66,17 @@ def _clz64(x: np.ndarray) -> np.ndarray:
 
 
 def update(state: HllState, values) -> HllState:
-    # numeric batches dedupe before hashing (idempotent registers; Zipfian
-    # batches are mostly repeats; floats dedupe on bit patterns so ±0.0 /
-    # NaN variants stay exactly what hash64 distinguishes); distinct values
-    # give distinct hashes, so update_hashes skips its own dedupe then
-    vals = np.asarray(values)
-    if vals.dtype.kind in "iuf":
-        return update_hashes(state, hash64(dedupe_values(vals)), dedupe=False)
-    return update_hashes(state, hash64(vals))
+    """Add a batch of values; nulls are skipped."""
+    return update_distinct(state, distinct(values))
 
 
-def update_unique_hashes(state: HllState, uh: np.ndarray, counts: np.ndarray | None = None) -> HllState:
-    """Shared-hash fast path (multi-kind harness): ``uh`` are DISTINCT
-    ``hash64`` keys.  ``counts`` is ignored — register max is idempotent.
-    Register-identical to ``update(values)``: ranks derive only from h1."""
-    return update_hashes(state, uh, dedupe=False)
-
-
-def update_hashes(state: HllState, h: np.ndarray, *, dedupe: bool = True) -> HllState:
+def update_distinct(state: HllState, d: Distinct) -> HllState:
+    """Add a ``distinct`` batch.  Register max is idempotent per hash, so
+    the clz / bincount passes run over the distinct hashes only (Zipfian
+    token batches shrink 4-10x); ``counts`` are ignored."""
+    h = d.hashes
     if h.size == 0:
         return state
-    # register updates are idempotent per hash (same (idx, rank) → same max),
-    # so dedupe first: Zipfian token batches shrink 4-10x, and the clz /
-    # bincount passes run on the distinct set only.  Callers that already
-    # deduped (or hold near-distinct hashes) pass dedupe=False.
-    h = h.astype(_U64, copy=False)
-    if dedupe:
-        h = np.unique(h)
     p = _U64(state.p)
     idx = (h >> (_U64(64) - p)).astype(np.int64)
     w = h << p  # remaining 64-p bits, left-aligned

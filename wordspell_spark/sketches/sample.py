@@ -14,10 +14,11 @@ Sampling rule: a value is retained iff its ``hash64`` is among the k
 smallest distinct hashes seen — so membership is a pure function of the
 value, and the merged sample of any partition tree equals the sample of
 the union (bit-exact associative/commutative/idempotent, property-tested;
-on the 2^-64 chance of a hash collision the smaller value wins, keeping
-the rule deterministic).  Below k distinct values the sample is EXACT —
-it IS the distinct set — which the driver-gate oracle exploits the same
-way theta's exact mode does.
+when merged states hold colliding hashes the smaller value wins, keeping
+the merge deterministic; within one batch ``hashing.distinct`` keeps the
+first-seen value per hash, see ``update_distinct``).  Below k distinct
+values the sample is EXACT — it IS the distinct set — which the
+driver-gate oracle exploits the same way theta's exact mode does.
 
 Estimate of total distinct cardinality comes for free (same estimator as
 theta: (k-1) * 2^64 / k-th smallest hash, RSE <= 1/sqrt(k-2)).
@@ -28,10 +29,9 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 
 from . import serde
-from .hashing import hash64, kmv_estimate, kmv_rse, normalize_items
+from .hashing import Distinct, distinct, kmv_estimate, kmv_rse, normalize_items
 
 DEFAULT_K = 1024
 
@@ -68,25 +68,26 @@ def is_exact(state: SampleState) -> bool:
 
 
 def update(state: SampleState, values) -> SampleState:
-    """Batch update: dedupe the VALUES first with one pd.factorize pass
-    (C hash table; also drops None/NaN — they factorize to code -1), then
-    hash and normalize only the distinct survivors — both the expensive
-    ``hash64`` and all python-level work run over O(batch-distinct) items,
-    never O(rows) (BASELINE.json input_hint).  Equal-hash distinct values
-    (a 2^-64 collision) fall through to ``_absorb``'s min-value rule."""
-    vals = np.asarray(values)
-    if vals.size == 0:
-        return state
-    uniq_vals = np.asarray(pd.factorize(vals)[1])
-    if uniq_vals.size == 0:
-        return state
-    h = hash64(uniq_vals).astype(_U64, copy=False)
+    """Add a batch of int or str values; nulls are skipped."""
+    return update_distinct(state, distinct(values))
+
+
+def update_distinct(state: SampleState, d: Distinct) -> SampleState:
+    """Add a ``distinct`` batch: only candidates at or below the current
+    k-th smallest hash are normalized, so all python-level work runs over
+    O(batch-distinct) items, never O(rows) (BASELINE.json input_hint).
+    Equal-hash entries reach ``_absorb``'s min-value rule; ``counts`` are
+    ignored.  ``distinct`` hands over one value per ``hash64`` class, so
+    through ``update`` two values colliding on 64 bits (chance about
+    n^2 / 2^65 for a batch of n distinct values) in ONE batch keep the
+    first-seen one, not the smaller."""
+    h, vals = d.hashes, d.values
     if not is_exact(state):
         keep = h <= state.hashes[-1]
-        h, uniq_vals = h[keep], uniq_vals[keep]
-        if h.size == 0:
-            return state
-    return _absorb(state, h, normalize_items(uniq_vals))
+        h, vals = h[keep], vals[keep]
+    if h.size == 0:
+        return state
+    return _absorb(state, h, normalize_items(vals))
 
 
 def _absorb(state: SampleState, h: np.ndarray, items: list) -> SampleState:

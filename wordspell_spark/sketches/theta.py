@@ -32,7 +32,7 @@ from dataclasses import dataclass
 import numpy as np
 
 from . import serde
-from .hashing import dedupe_values, hash64, kmv_estimate, kmv_rse
+from .hashing import Distinct, distinct, kmv_estimate, kmv_rse
 
 DEFAULT_K = 4096  # RSE = 1/sqrt(k-2) ~ 1.56%
 
@@ -75,25 +75,16 @@ def _retained(state: ThetaState) -> np.ndarray:
 
 
 def update(state: ThetaState, values) -> ThetaState:
-    vals = np.asarray(values)
-    if vals.size == 0:
-        return state
-    if vals.dtype.kind in "iuf":
-        return update_hashes(state, hash64(dedupe_values(vals)))
-    return update_hashes(state, hash64(vals))
+    """Add a batch of values; nulls are skipped."""
+    return update_distinct(state, distinct(values))
 
 
-def update_unique_hashes(state: ThetaState, uh: np.ndarray, counts: np.ndarray | None = None) -> ThetaState:
-    """Shared-hash fast path (harness multi-build): ``uh`` are DISTINCT
-    ``hash64`` keys; ``counts`` is ignored — retention is idempotent.
-    Bit-identical to ``update(values)``: the state holds raw h1 keys."""
-    return update_hashes(state, uh)
-
-
-def update_hashes(state: ThetaState, h: np.ndarray) -> ThetaState:
+def update_distinct(state: ThetaState, d: Distinct) -> ThetaState:
+    """Add a ``distinct`` batch: retention is idempotent, so only the
+    hashes matter; ``counts`` are ignored."""
+    h = d.hashes
     if h.size == 0:
         return state
-    h = h.astype(_U64, copy=False)
     if not is_exact(state):
         # only candidates below the current k-th smallest can enter
         h = h[h < state.hashes[-1]]
